@@ -10,6 +10,10 @@ import org.apache.spark.sql.SparkSession
   * time zone for oracle parity.
   */
 object GraftSession {
+  /** Core count of the engine's mains: SPARK_GRAFT_CPUS, else every core. */
+  private[graft] def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession
       .builder()

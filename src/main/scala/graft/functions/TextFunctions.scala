@@ -106,16 +106,10 @@ object TextFunctions {
   }
 
   /** Full MinHash signature as array<long> of length `numHashes`
-    * (<= MinhashParams.length). Base hashes are materialized once per
-    * shingle and reused by every permutation — numHashes adds only cheap
-    * integer ops, not md5 calls.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    minhashSignatureFromBases(transform(array_distinct(shingles), g => shingleBaseHash(g)), numHashes)
-
-  /** Signature from pre-computed base hashes (array<long>, already mod p) —
-    * lets callers hash each shingle exactly once and reuse the longs for
-    * both banding and Jaccard verify.
+    * (<= MinhashParams.length) from pre-computed base hashes (array<long>,
+    * already mod p) — callers hash each shingle exactly once and reuse
+    * the longs for both banding and Jaccard verify; numHashes adds only
+    * cheap integer ops, not md5 calls.
     *
     * Deliberately numHashes separate `array_min(transform(...))` passes,
     * NOT one aggregate fold carrying an array of running minima: HOFs run

@@ -86,56 +86,6 @@ object Dedup {
           .otherwise(col("n_dup").cast("double") / col("n_shingles")))
   }
 
-  /** MinHash-LSH candidate pairs: signature of `numHashes` md5 minhashes,
-    * banded `rowsPerBand` hashes per band; pairs sharing any band bucket.
-    * Returns distinct (id_a, id_b) with id_a < id_b.
-    *
-    * The band join shuffles on the band key only — at 100 TB this is the
-    * standard signature-join plan (no cross join anywhere).
-    */
-  def lshCandidates(
-      docs: DataFrame,
-      idCol: String,
-      shCol: String,
-      numHashes: Int,
-      rowsPerBand: Int
-  ): DataFrame =
-    lshCandidatesFromSig(docs, idCol, TextFunctions.minhashSignature(col(shCol), numHashes),
-      numHashes, rowsPerBand)
-
-  /** As `lshCandidates` but with a caller-supplied signature expression
-    * (e.g. built from pre-hashed shingles via minhashSignatureFromBases).
-    */
-  def lshCandidatesFromSig(
-      docs: DataFrame,
-      idCol: String,
-      sig: org.apache.spark.sql.Column,
-      numHashes: Int,
-      rowsPerBand: Int
-  ): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    // band key = concat of the band's hashes; null signature (empty shingle
-    // set) rows drop out — they cannot be near-dups of anything.
-    val banded = docs
-      .select(col(idCol), sig.as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(
-        col(idCol),
-        posexplode(
-          array((0 until numBands).map(b =>
-            concat_ws("|", (0 until rowsPerBand).map(r =>
-              col("sig")(b * rowsPerBand + r).cast("string")): _*)
-          ): _*)
-        ).as(Seq("band", "key"))
-      )
-    banded
-      .as("a")
-      .join(banded.as("b"), Seq("band", "key"))
-      .where(col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
-  }
-
   /** Near-duplicate pairs: LSH candidates verified with exact Jaccard over
     * the hashed shingle sets, kept at >= `threshold`.
     *
@@ -155,27 +105,43 @@ object Dedup {
       numHashes: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.4
+  ): DataFrame =
+    nearDupPairsOnBands(
+      signatureBands(docs, idCol, textCol, shingleN, numHashes, rowsPerBand),
+      idCol, threshold)
+
+  /** The candidate stage of every LSH-style self-join: band-table rows
+    * meeting on (band, key) with `a.id < b.id`, projected to `id_a`,
+    * `id_b` and each `carry` column suffixed `_a`/`_b`; `verify` maps
+    * those pair rows to the output, and a pair colliding in several
+    * bands is emitted once. The rename happens AFTER the join, so both
+    * sides canonicalize to one plan and ReuseExchange materializes the
+    * band shuffle once; a (band, key)-bucketed table joins with no
+    * exchange at all (BucketedJoinSpec).
+    */
+  private[graft] def bandSelfJoin(
+      bands: DataFrame,
+      idCol: String,
+      carry: Seq[String] = Seq.empty,
+      verify: DataFrame => DataFrame = identity
   ): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    val hashedSig = hashedSignatures(docs, idCol, textCol, shingleN, numHashes)
-    val banded = bandExplode(hashedSig, idCol, numBands, rowsPerBand)
-    // true self-join with the rename AFTER the join: both sides canonicalize
-    // to the identical plan, so ReuseExchange materializes the banded
-    // shuffle ONCE instead of recomputing shingles+hashes per side
-    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
-      .column(col("hs_a"), col("hs_b")).cast("double")
-    banded.alias("a")
-      .join(
-        banded.alias("b"),
-        col(s"a.band") === col(s"b.band") && col(s"a.key") === col(s"b.key") &&
+    def side(s: String) =
+      col(s"$s.$idCol").as(s"id_$s") +: carry.map(c => col(s"$s.$c").as(s"${c}_$s"))
+    verify(bands.alias("a")
+      .join(bands.alias("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(
-        col(s"a.$idCol").as("id_a"), col("a.hs").as("hs_a"),
-        col(s"b.$idCol").as("id_b"), col("b.hs").as("hs_b"))
-      .withColumn("jacc", inter / (size(col("hs_a")) + size(col("hs_b")) - inter))
-      .filter(col("jacc") >= threshold)
-      .select("id_a", "id_b", "jacc")
+      .select(side("a") ++ side("b"): _*))
       .distinct()
+  }
+
+  /** Exact Jaccard of two sorted distinct hash arrays: merge-scan
+    * |A ∩ B|, and |A ∪ B| = |A| + |B| - |A ∩ B| (no union array).
+    */
+  private def jaccard(hsA: Column, hsB: Column): Column = {
+    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
+      .column(hsA, hsB).cast("double")
+    inter / (size(hsA) + size(hsB) - inter)
   }
 
   /** Per-doc (id, sorted distinct shingle hashes, minhash signature),
@@ -305,16 +271,13 @@ object Dedup {
     val inBands = bandExplode(
       hashedSignatures(incoming, idCol, textCol, shingleN, numHashes),
       idCol, numBands, rowsPerBand)
-    val corpBands = corpusBands
-    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
-      .column(col("hs_a"), col("hs_b")).cast("double")
     val dupCounts = inBands.alias("a")
-      .join(corpBands.alias("b"),
+      .join(corpusBands.alias("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key"))
       .select(
         col(s"a.$idCol").as("in_id"), col("a.hs").as("hs_a"),
         col(s"b.$idCol").as("corp_id"), col("b.hs").as("hs_b"))
-      .withColumn("jacc", inter / (size(col("hs_a")) + size(col("hs_b")) - inter))
+      .withColumn("jacc", jaccard(col("hs_a"), col("hs_b")))
       .filter(col("jacc") >= threshold)
       // a pair can collide in several bands — count each corpus doc once
       .select("in_id", "corp_id")
@@ -379,22 +342,11 @@ object Dedup {
       bands: DataFrame,
       idCol: String,
       threshold: Double = 0.4
-  ): DataFrame = {
-    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
-      .column(col("hs_a"), col("hs_b")).cast("double")
-    bands.alias("a")
-      .join(
-        bands.alias("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(
-        col(s"a.$idCol").as("id_a"), col("a.hs").as("hs_a"),
-        col(s"b.$idCol").as("id_b"), col("b.hs").as("hs_b"))
-      .withColumn("jacc", inter / (size(col("hs_a")) + size(col("hs_b")) - inter))
+  ): DataFrame =
+    bandSelfJoin(bands, idCol, Seq("hs"), _
+      .withColumn("jacc", jaccard(col("hs_a"), col("hs_b")))
       .filter(col("jacc") >= threshold)
-      .select("id_a", "id_b", "jacc")
-      .distinct()
-  }
+      .select("id_a", "id_b", "jacc"))
 
   /** LSH banding-parameter AUDIT: for each (numBands, rowsPerBand)
     * config over ONE shared signature table, the candidate-pair count
@@ -428,15 +380,8 @@ object Dedup {
         spreadTo = docs.sparkSession.sparkContext.defaultParallelism)
       .localCheckpoint(false)
     val sig = hashedSignatures(docsS, idCol, textCol, shingleN, numHashes)
-    def candidates(src: DataFrame, bands: Int, rows: Int): DataFrame = {
-      val b = bandExplode(src, idCol, bands, rows, carry = Seq.empty)
-      b.alias("a")
-        .join(b.alias("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-        .distinct()
-    }
+    def candidates(bands: Int, rows: Int): DataFrame =
+      bandSelfJoin(bandExplode(sig, idCol, bands, rows, carry = Seq.empty), idCol)
     // band buckets on a dense corpus hold ~N/m docs, so EVERY config's
     // pair volume is ~N^2-ish — corpus-wide, the (8,1) truth measured
     // 1065 s and even the (4,2) count alone 433 s at the 10x headroom
@@ -446,19 +391,16 @@ object Dedup {
     // identity at oracle scales). Counts and recall are sample
     // estimates — exactly what a pre-flight banding decision needs, at
     // a bounded O(target^2) worst-case cost.
-    val sigS = sig
-    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
-      .column(col("hs_a"), col("hs_b")).cast("double")
-    val truth = candidates(sigS, numHashes, 1)
+    val truth = candidates(numHashes, 1)
       .join(sig.select(col(idCol).as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
       .join(sig.select(col(idCol).as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-      .withColumn("jacc", inter / (size(col("hs_a")) + size(col("hs_b")) - inter))
+      .withColumn("jacc", jaccard(col("hs_a"), col("hs_b")))
       .filter(col("jacc") >= threshold)
       .select(col("id_a"), col("id_b"), lit(1L).as("t"))
       .localCheckpoint(false) // audited against every config's candidates
     val totals = truth.agg(count(lit(1)).as("n_true_total"))
     configs.map { case (bands, rpb) =>
-      candidates(sigS, bands, rpb)
+      candidates(bands, rpb)
         .join(broadcast(truth), Seq("id_a", "id_b"), "left")
         .agg(
           count(lit(1)).as("n_candidates"),
@@ -489,30 +431,20 @@ object Dedup {
       rowsPerBand: Int = 4,
       threshold: Double = 0.4
   ): DataFrame = {
-    val numBands = numHashes / rowsPerBand
     val hashedSig = hashedSignatures(docs, idCol, textCol, shingleN, numHashes)
     // carry the full signature through the join alongside the shingle
     // hashes: agreement count is a zip over two 8-slot arrays — cheap next
     // to the merge-scan intersect it rides with
-    val banded = bandExplode(hashedSig, idCol, numBands, rowsPerBand, carry = Seq("hs", "sig"))
-    val inter = org.apache.spark.sql.graft.LongArrayIntersectSize
-      .column(col("hs_a"), col("hs_b")).cast("double")
+    val carry = Seq("hs", "sig")
+    val banded = bandExplode(hashedSig, idCol, numHashes / rowsPerBand, rowsPerBand, carry)
     val agree = aggregate(
       zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1L).otherwise(0L)),
       lit(0L), (acc, x) => acc + x)
-    banded.alias("a")
-      .join(
-        banded.alias("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(
-        col(s"a.$idCol").as("id_a"), col("a.hs").as("hs_a"), col("a.sig").as("sig_a"),
-        col(s"b.$idCol").as("id_b"), col("b.hs").as("hs_b"), col("b.sig").as("sig_b"))
+    bandSelfJoin(banded, idCol, carry, _
       .withColumn("est_jacc", agree.cast("double") / numHashes)
-      .withColumn("jacc", inter / (size(col("hs_a")) + size(col("hs_b")) - inter))
+      .withColumn("jacc", jaccard(col("hs_a"), col("hs_b")))
       .filter(col("jacc") >= threshold)
-      .select("id_a", "id_b", "est_jacc", "jacc")
-      .distinct()
+      .select("id_a", "id_b", "est_jacc", "jacc"))
   }
 
   /** SimHash over whitespace tokens: each token hashes to `bits` bits (md5
@@ -588,16 +520,7 @@ object Dedup {
     // the per-shingle hashing, the dominant CPU cost. Lazy (not
     // eager) so building the plan stays action-free; the first action
     // materializes it once into the block manager.
-    val hashed = docs
-      .select(
-        col(idCol),
-        array_sort(
-          array_distinct(
-            transform(shingleSet(col(textCol), shingleN), g => xxhash64(g))
-          )
-        ).as("hs")
-      )
-      .withColumn("nsh", size(col("hs")))
+    val hashed = containmentHashed(docs, idCol, textCol, shingleN)
       .filter(col("nsh") > 0)
       .localCheckpoint(false)
     val ex = hashed.select(col(idCol), col("nsh"), explode(col("hs")).as("h"))
@@ -691,16 +614,7 @@ object Dedup {
       threshold: Double
   ): DataFrame = {
     require(threshold > 0, "prefix filtering requires a positive threshold")
-    val hashed = docs
-      .select(
-        col(idCol),
-        array_sort(
-          array_distinct(
-            transform(shingleSet(col(textCol), shingleN), g => xxhash64(g))
-          )
-        ).as("hs")
-      )
-      .withColumn("nsh", size(col("hs")))
+    val hashed = containmentHashed(docs, idCol, textCol, shingleN)
       .filter(col("nsh") > 0)
       .localCheckpoint(false)
     val ex = hashed.select(col(idCol), col("nsh"), explode(col("hs")).as("h"))
@@ -714,11 +628,7 @@ object Dedup {
     // full posting side is what makes this exact-truth baseline fast at
     // audit scale, and the reorder is not on its warm critical path.
     // ngramJaccardPairs keeps both changes, where they measured faster.)
-    val ordered = ex
-      .join(freq, Seq("h"))
-      .groupBy(col(idCol), col("nsh"))
-      .agg(transform(sort_array(collect_list(struct(col("df"), col("h")))), x => x("h")).as("sg"))
-      .localCheckpoint(false)
+    val ordered = rareFirstOrder(ex, freq, idCol, "inner").localCheckpoint(false)
     val prefixLen = (col("nsh") - ceil(lit(threshold) * col("nsh")) + 1).cast("int")
     val prefixes = ordered.select(
       col(idCol), col("nsh"),
@@ -893,7 +803,8 @@ object Dedup {
       hashed: DataFrame, freq: DataFrame, postings: DataFrame)
 
   /** (id, sorted distinct xxhash64 shingle hashes, shingle count) of a
-    * document frame — the shared hashing step of the exact screens.
+    * document frame — the shared hashing step of the exact prefix-filter
+    * operators (ngramJaccardPairs, containmentPairs, the exact screens).
     */
   private def containmentHashed(df: DataFrame, idCol: String,
       textCol: String, shingleN: Int): DataFrame = df
@@ -908,7 +819,9 @@ object Dedup {
     .withColumn("nsh", size(col("hs")))
 
   /** Shingle rows re-assembled per doc in (corpus df, h) rare-first
-    * order — the shared total order of the exact screens' prefix filter.
+    * order — the shared total order of containmentPairs' and the exact
+    * screens' prefix filter. An inner join never yields a null df, so the
+    * optimizer folds the coalesce away there.
     */
   private def rareFirstOrder(ex: DataFrame, freq: DataFrame, idCol: String,
       joinType: String): DataFrame = ex
@@ -1026,12 +939,10 @@ object Dedup {
       k: Int,
       screenFrac: Double,
       dfCap: Long
-  ): DataFrame = {
-    val post = containmentPostings(corpus, idCol, textCol, shingleN)
-      .localCheckpoint(false) // feeds the df table AND the probe join
-    bottomKContainmentScreenOnPostings(incoming, post, postingDf(post),
+  ): DataFrame =
+    bottomKContainmentScreenOnIndex(incoming,
+      containmentIndex(containmentPostings(corpus, idCol, textCol, shingleN)),
       idCol, textCol, shingleN, k, screenFrac, dfCap)
-  }
 
   /** The corpus-side POSTING LIST of the containment screens — one
     * (c_id, h) row per distinct md5 shingle hash per corpus doc. This is
@@ -1058,39 +969,30 @@ object Dedup {
     // 7.2 s vs 1.3 s on the sf0.1 corpus side)
     .select(col("c_id"), explode(col("hs")).as("h"))
 
-  /** The DICTIONARY half of the term index: per shingle hash, its corpus
-    * document frequency — the df stop-cut table of the bottom-k screen.
-    */
-  def postingDf(postings: DataFrame): DataFrame =
-    postings.groupBy("h").agg(count(lit(1)).as("df"))
-
   /** The GROUPED term index of the bottom-k screen: one row per distinct
-    * shingle hash carrying its document frequency AND its posting list —
-    * `postingDf` and `containmentPostings` folded into one structure
+    * shingle hash carrying its document frequency AND its posting list
     * (df = size of the list by construction). Built ONCE from the
-    * postings (one groupBy), it lets a per-micro-batch probe touch the
-    * corpus side in a SINGLE pass: the old (post, freq) pair cost every
-    * batch one full scan of EACH corpus-sized frame (the df lookup
-    * scanned the dictionary, the rare probe scanned the postings), and
-    * on a 4-batch stream that was 8 corpus-sized scans per gate run
-    * (guide §2.4 — remove passes outright; measured: the two scans were
-    * the two heaviest stages of every q191 micro-batch). At 100 TB this
-    * IS the classic postings-list layout: written bucketed by `h`, the
-    * probe join prunes to matching buckets.
+    * postings (one groupBy), it lets a probe touch the corpus side in a
+    * SINGLE pass: a separate dictionary + posting-list pair cost every
+    * batch one full scan of EACH corpus-sized frame, and on a 4-batch
+    * stream that was 8 corpus-sized scans per gate run (measured: the two
+    * scans were the two heaviest stages of every q191 micro-batch). At
+    * 100 TB this IS the classic postings-list layout: written bucketed
+    * by `h`, the probe join prunes to matching buckets.
     */
   def containmentIndex(postings: DataFrame): DataFrame =
     postings.groupBy("h")
       .agg(count(lit(1)).as("df"), collect_list(col("c_id")).as("cs"))
 
-  /** As `bottomKContainmentScreenOnPostings`, but the corpus side is the
-    * GROUPED `containmentIndex` frame — the per-micro-batch serving
-    * entry point. Per batch the corpus side is touched exactly once: the
-    * probe's <= k·|batch| distinct hashes semi-filter the index, df
-    * lookups read the surviving rows, and the rare-probe posting rows
-    * are exploded from those same rows (<= k·dfCap per doc, the stop-cut
-    * bound). Answers are identical to the (post, freq) form: df is the
-    * posting-row count per hash, and exploding the filtered lists yields
-    * exactly the posting rows the old semi-join kept.
+  /** As `bottomKContainmentScreen`, but the corpus side is a pre-built
+    * `containmentIndex` frame — the one probe of the bottom-k screen,
+    * shared by the batch q190 and the per-micro-batch q191 gate. A
+    * foreachBatch gate builds (or reads) the index ONCE and every batch
+    * pays only its own probe, never a corpus re-shingle. The corpus side
+    * is touched exactly once: the probe's <= k·|incoming| distinct
+    * hashes semi-filter the index, df lookups read the surviving rows,
+    * and the rare-probe posting rows are exploded from those same rows
+    * (<= k·dfCap per doc, the stop-cut bound).
     */
   def bottomKContainmentScreenOnIndex(
       incoming: DataFrame,
@@ -1133,82 +1035,6 @@ object Dedup {
     // post-side semi-join kept, exploded from the already-probed index
     val rareHit = idxHit.filter(col("df") <= dfCap)
       .select(col("h"), explode(col("cs")).as("c_id"))
-    val mRare = rareHit
-      .join(sampled.filter(col("df") <= dfCap).select(col(idCol), col("h")),
-        Seq("h"))
-      .filter(col(idCol) =!= col("c_id"))
-      .groupBy(col(idCol), col("c_id")).agg(count(lit(1)).as("m_rare"))
-    val hits = mRare.join(nCap, Seq(idCol))
-      .filter(col("m_rare") + col("n_cap") >= ceil(lit(screenFrac) * col("ka")))
-      .groupBy(idCol).agg(count(lit(1)).as("n_containers"))
-    hi.select(col(idCol))
-      .join(hits, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("n_containers"), lit(0L)).as("n_containers"))
-      .withColumn("kept", col("n_containers") === 0)
-  }
-
-  /** As `bottomKContainmentScreen`, but the corpus side arrives as a
-    * pre-built term index — `post` in `containmentPostings` shape and
-    * `freq` in `postingDf` shape. The streaming entry point: a
-    * foreachBatch gate builds (or reads) the index ONCE and every
-    * micro-batch pays only its own bottom-k probes (<= k·dfCap posting
-    * rows per doc), never a corpus-side rebuild — without this split the
-    * per-batch screen re-shingled the whole static corpus, the dominant
-    * cost at any scale. Callers should materialize both frames
-    * (localCheckpoint locally; a bucketed table in production).
-    */
-  def bottomKContainmentScreenOnPostings(
-      incoming: DataFrame,
-      post: DataFrame,
-      freq: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      k: Int,
-      screenFrac: Double,
-      dfCap: Long
-  ): DataFrame = {
-    require(k >= 1 && dfCap >= 1 && screenFrac > 0 && screenFrac <= 1,
-      "bottom-k screen needs k >= 1, dfCap >= 1, screenFrac in (0, 1]")
-    val hi = incoming
-      .select(
-        col(idCol),
-        hashedShingles(col(textCol), shingleN).as("hs"))
-      .withColumn("nsh", size(col("hs")))
-      .localCheckpoint(false) // sample side + output spine, shared by q190-sized slices
-    // the probe's hash set is <= k rows per incoming doc — SEMI-FILTER
-    // the corpus-side index with it instead of joining into it: when
-    // the probe side is broadcastable the dictionary and posting frames
-    // are only ever scanned map-side (a cached scan locally, a
-    // bucketed-table scan in production) and the screen — in particular
-    // a per-micro-batch streaming one — never pays a corpus-sized
-    // exchange. The broadcast decision is AQE's, NOT a hint: the probe
-    // set grows linearly with the incoming batch (k·|incoming| rows), so
-    // a hardwired broadcast() that is right for a micro-batch would pin
-    // a multi-GB build on every executor when a BULK slice (q190's
-    // shape at full scale) probes the same index — the runtime picks
-    // broadcast under the threshold and a plain shuffle join above it,
-    // and answers are identical either way
-    val sampledRaw = hi.filter(col("nsh") > 0)
-      .select(col(idCol), least(lit(k), col("nsh")).as("ka"),
-        explode(slice(col("hs"), lit(1), least(lit(k), col("nsh")))).as("h"))
-    val dictHit = freq
-      .join(sampledRaw.select("h").distinct(), Seq("h"), "left_semi")
-    val sampled = sampledRaw
-      .join(dictHit, Seq("h"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .localCheckpoint(false) // feeds the stop count AND the rare probe
-    // per-doc count of capped sampled hashes: evidence every join-made
-    // candidate container gets for free (df > cap ⇒ it has them)
-    val nCap = sampled.groupBy(col(idCol), col("ka"))
-      .agg(sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("n_cap"))
-    // df is a GLOBAL property of a hash, so a semi hit on the sample's
-    // rare (df <= dfCap) hashes already satisfies the corpus-side df cut
-    // — no posting-to-dictionary join at all; per-doc probe volume stays
-    // <= k*dfCap rows by construction
-    val rareHit = post
-      .join(sampled.filter(col("df") <= dfCap).select("h").distinct(),
-        Seq("h"), "left_semi")
     val mRare = rareHit
       .join(sampled.filter(col("df") <= dfCap).select(col(idCol), col("h")),
         Seq("h"))
@@ -1345,13 +1171,11 @@ object Dedup {
     // restrictions + columnar build cost: q52 5.3-5.4 s) and raw plan
     // chaining (the 3 in-plan references per round triple planning
     // work per level: q52 4.9-5.1 s).
-    val batchCap = sys.env.get("GRAFT_CC_BATCH").map(_.toInt).filter(_ >= 1)
-      .getOrElse(4)
+    val batchCap = 4
     var changed = 1L
     var iter = 0
     var batchNo = 0
     while (changed > 0 && iter < maxIter) {
-      val trr0 = System.nanoTime()
       val k = math.min(math.min(1 << batchNo, batchCap), maxIter - iter)
       batchNo += 1
       var cur = labels
@@ -1367,12 +1191,7 @@ object Dedup {
       // materializing action, so each batch pays ONE driver-side action.
       val next = org.apache.spark.sql.graft.CheckpointStats.freshCheckpoint(
         last, eager = false)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[resolveGroups] rounds $iter..${iter + k - 1} plan ${(System.nanoTime() - trr0) / 1e6}%.0f ms")
-      val tr0 = System.nanoTime()
       changed = next.filter(col("keep_id") =!= col("old_keep")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[resolveGroups] rounds $iter..${iter + k - 1} changed=$changed countMs=${(System.nanoTime() - tr0) / 1e6}%.0f")
       labels = next.select("id", "keep_id")
       iter += k
     }
@@ -1431,12 +1250,6 @@ object Dedup {
     simhashBandPairs(docs, idCol, shCol, bits, numBands = maxHamming + 1)
       .filter(col("hamming") <= maxHamming)
 
-  /** Distinct band-collision pairs (id_a < id_b, exact hamming attached)
-    * for ONE contiguous-band layout of a simhash column — the shared
-    * candidate stage of `simhashCandidates` (filtered) and
-    * `simhashTuningAudit` (counted raw: the candidate volume IS the
-    * shuffle cost a banding decision is buying).
-    */
   /** Contiguous-band explode of a hamming-space signature column:
     * (idCol, shCol, band, key) — the shared candidate-key stage of the
     * simhash self-join pairs, the tuning audit, and the incremental
@@ -1462,30 +1275,22 @@ object Dedup {
       ).as(Seq("band", "key"))
     )
 
+  /** Distinct band-collision pairs (id_a < id_b, exact hamming attached)
+    * for ONE contiguous-band layout of a simhash column — the shared
+    * candidate stage of `simhashCandidates` (filtered) and
+    * `simhashTuningAudit` (counted raw: the candidate volume IS the
+    * shuffle cost a banding decision is buying).
+    */
   private def simhashBandPairs(
       docs: DataFrame,
       idCol: String,
       shCol: String,
       bits: Int,
       numBands: Int
-  ): DataFrame = {
-    val banded = hammingBands(docs, idCol, shCol, bits, numBands)
-    // self-join with the rename AFTER the join: both sides canonicalize to
-    // the same plan so ReuseExchange materializes the banded shuffle once
-    banded.alias("a")
-      .join(
-        banded.alias("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col(s"a.$idCol") < col(s"b.$idCol")
-      )
-      .select(
-        col(s"a.$idCol").as("id_a"), col(s"a.$shCol").as("sh_a"),
-        col(s"b.$idCol").as("id_b"), col(s"b.$shCol").as("sh_b")
-      )
+  ): DataFrame =
+    bandSelfJoin(hammingBands(docs, idCol, shCol, bits, numBands), idCol, Seq(shCol), _
       .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
-      .distinct()
-  }
+        bit_count(col(s"${shCol}_a").bitwiseXOR(col(s"${shCol}_b"))).cast("long").as("hamming")))
 
   /** SimHash BANDING-PARAMETER AUDIT — the `lshTuningAudit` shape applied
     * to the hamming-banding family: for each band count over ONE shared

@@ -356,17 +356,9 @@ trait AnnRegistry extends RegistryBase {
         .select(col("vec_id"), sig.as("srp_sig"), v.as("dv"))
         .withColumn("nrm", Similarity.l2Norm(col("dv")))
       val vecs = e.select(col("vec_id"), col("dv"), col("nrm"))
-      val banded = e.select(col("vec_id"),
-          explode(array(
-            struct(lit(0).as("band"), col("srp_sig").bitwiseAND(lit(255L)).as("key")),
-            struct(lit(1).as("band"), shiftright(col("srp_sig"), 8).as("key")))).as("bk"))
-        .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      banded.alias("a")
-        .join(banded.alias("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-        .distinct() // a pair can collide in both bands
+      // distinct (id_a, id_b): a pair can collide in both bands
+      Dedup.bandSelfJoin(
+          Dedup.hammingBands(e, "vec_id", "srp_sig", bits = 16, numBands = 2), "vec_id")
         .join(vecs.select(col("vec_id").as("id_a"), col("dv").as("dv_a"), col("nrm").as("nrm_a")), Seq("id_a"))
         .join(vecs.select(col("vec_id").as("id_b"), col("dv").as("dv_b"), col("nrm").as("nrm_b")), Seq("id_b"))
         .withColumn("cos_sim", Similarity.dot(col("dv_a"), col("dv_b")) / (col("nrm_a") * col("nrm_b")))

@@ -322,8 +322,8 @@ trait DedupRegistry extends RegistryBase {
     // that drives q175's exact prefix superlinear on a flat vocabulary
     // (the q159 df trick applied to shingles).
     "q190_containment_screen_bottomk" -> ((s, dir) => {
-      // spread() barriers internally, so the postings checkpoint below
-      // already sits over a cached scan, not an exchange
+      // spread() barriers internally, so the term index below is built
+      // over a cached scan, not an exchange; same probe as the q191 gate
       val docs = spread(s, rd(s, dir, "documents"))
       val incoming = docs.filter(col("doc_id") % IncrementalMod === IncrementalMod - 1)
       val corpus = docs.filter(col("doc_id") % IncrementalMod =!= IncrementalMod - 1)

@@ -58,6 +58,40 @@ class DedupEquivalenceSpec extends SparkSpec {
       assert(brute.nonEmpty, "corpus should contain qualifying pairs")
       assert(fast == brute)
     }
+
+    test(s"nearDuplicates == nearDupPairsOnBands(signatureBands) (seed=$seed, t=$threshold)") {
+      val docs = corpus(seed, 40).toDF("doc_id", "text")
+      val direct = Dedup.nearDuplicates(docs, "doc_id", "text",
+          shingleN = 4, numHashes = 8, rowsPerBand = 2, threshold = threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val viaBands = Dedup.nearDupPairsOnBands(
+          Dedup.signatureBands(docs, "doc_id", "text",
+            shingleN = 4, numHashes = 8, rowsPerBand = 2),
+          "doc_id", threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(direct.nonEmpty, "corpus should contain near-duplicate pairs")
+      assert(viaBands == direct)
+    }
+
+    test(s"band self-join operators emit each unordered pair once, id_a < id_b (seed=$seed, t=$threshold)") {
+      val docs = corpus(seed, 40).toDF("doc_id", "text")
+      val h = docs.select(col("doc_id"), Dedup.simhash(col("text"), 16).as("sh"))
+      val outputs = Seq(
+        "nearDuplicates" -> Dedup.nearDuplicates(docs, "doc_id", "text",
+          shingleN = 4, numHashes = 8, rowsPerBand = 2, threshold = threshold),
+        "nearDuplicatesWithEstimate" -> Dedup.nearDuplicatesWithEstimate(docs, "doc_id", "text",
+          shingleN = 4, numHashes = 8, rowsPerBand = 2, threshold = threshold),
+        "simhashCandidates" -> Dedup.simhashCandidates(h, "doc_id", "sh", 16, 3),
+        // the q107 shape: bare candidate pairs over two 8-bit bands
+        "bandSelfJoin" -> Dedup.bandSelfJoin(
+          Dedup.hammingBands(h, "doc_id", "sh", bits = 16, numBands = 2), "doc_id"))
+      for ((name, df) <- outputs) {
+        val pairs = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(pairs.nonEmpty, s"$name: corpus should produce pairs")
+        assert(pairs.forall { case (a, b) => a < b }, s"$name: id_a < id_b")
+        assert(pairs.distinct.size == pairs.size, s"$name: a pair is emitted more than once")
+      }
+    }
   }
 
   for (seed <- Seq(1, 42); maxH <- Seq(1, 2, 3)) {

@@ -90,14 +90,6 @@ class DedupSpec extends SparkSpec {
     assert(est.find(t => t._1 == 0L && t._2 == 1L).get._3 == 1.0)
   }
 
-  test("lshCandidates: band collision requires identical minhash band") {
-    val withSh = docs.select(col("doc_id"), Dedup.shingleSet(col("text"), 4).as("sh"))
-    val cands = Dedup.lshCandidates(withSh, "doc_id", "sh", 8, 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cands.contains((0L, 1L))) // identical docs collide in every band
-    assert(cands.forall { case (a, b) => a < b }) // canonical pair order
-  }
-
   test("simhash: identical texts get identical hashes; value fits the bit width") {
     val h = docs.select(col("doc_id"), Dedup.simhash(col("text"), 16).as("sh")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -355,7 +347,7 @@ class DedupSpec extends SparkSpec {
     assert(uncapped.toSeq == Seq((100L, false)))
   }
 
-  test("bottomKContainmentScreenOnPostings: pre-built term index == text path") {
+  test("bottomKContainmentScreenOnIndex: term index == text path == plain-Scala screen") {
     import spark.implicits._
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta")
     val corpus = (0 until 25).map { i =>
@@ -366,26 +358,41 @@ class DedupSpec extends SparkSpec {
         .split(" ").slice(2, 6).mkString(" ")),
       (101L, "votre nouveau document sans aucun recouvrement"),
       (102L, "ab")).toDF("doc_id", "text")
-    // the streaming shape: index built once, screened against — answers
-    // must be identical to the single-call text path at every config
+    def hashes(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.select(col("doc_id"), Dedup.hashedShingles(col("text"), 3).as("hs")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val corpusHs = hashes(corpus).map { case (c, hs) => c -> hs.toSet }
+    val incomingHs = hashes(incoming)
+    val df = corpusHs.values.toSeq.flatten.groupBy(identity).map { case (h, v) => h -> v.size.toLong }
+    // the screen's definition, row by row: sample = the k smallest
+    // hashes; a corpus doc becomes a candidate only through a shared
+    // rare (df <= cap) hash, and passes once its rare hits plus the
+    // sample's capped hashes reach ceil(screenFrac * ka)
+    def reference(k: Int, cap: Long): Set[(Long, Long, Boolean)] =
+      incomingHs.map { case (id, hs) =>
+        val sample = hs.take(k)
+        val (rare, capped) = sample.partition(h => df.getOrElse(h, 0L) <= cap)
+        val n = corpusHs.count { case (_, c) =>
+          val mRare = rare.count(c.contains)
+          mRare > 0 && mRare + capped.size >= math.ceil(0.6 * sample.size)
+        }.toLong
+        (id, n, n == 0)
+      }.toSet
+    // the streaming shape: index built once (eagerly, as the q191 gate
+    // does), then screened against — answers must equal the single-call
+    // text path at every config
     for ((k, cap) <- Seq((8, 5L), (1000, 100000L))) {
-      val post = Dedup.containmentPostings(corpus, "doc_id", "text", shingleN = 3)
-        .localCheckpoint(false)
-      val onIdx = Dedup.bottomKContainmentScreenOnPostings(incoming, post,
-          Dedup.postingDf(post), "doc_id", "text", shingleN = 3,
-          k = k, screenFrac = 0.6, dfCap = cap)
+      val index = Dedup.containmentIndex(
+          Dedup.containmentPostings(corpus, "doc_id", "text", shingleN = 3))
+        .localCheckpoint(true)
+      val onIdx = Dedup.bottomKContainmentScreenOnIndex(incoming, index,
+          "doc_id", "text", shingleN = 3, k = k, screenFrac = 0.6, dfCap = cap)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       val direct = Dedup.bottomKContainmentScreen(incoming, corpus, "doc_id", "text",
           shingleN = 3, k = k, screenFrac = 0.6, dfCap = cap)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       assert(onIdx == direct, s"k=$k dfCap=$cap")
-      // the GROUPED one-pass index (round 18, the q191 per-batch shape):
-      // same answers as the (post, freq) pair at every config
-      val grouped = Dedup.bottomKContainmentScreenOnIndex(incoming,
-          Dedup.containmentIndex(post), "doc_id", "text", shingleN = 3,
-          k = k, screenFrac = 0.6, dfCap = cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(grouped == direct, s"grouped index k=$k dfCap=$cap")
+      assert(direct == reference(k, cap), s"plain-Scala screen k=$k dfCap=$cap")
     }
   }
 

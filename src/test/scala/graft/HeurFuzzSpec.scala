@@ -10,8 +10,11 @@ import graft.sources.Readers
   */
 class HeurFuzzSpec extends SparkSpec {
 
-  private val exQ = "/root/reference/example/test_query.txt"
-  private val exR = "/root/reference/example/test_refs.txt"
+  // the reference's worked example (FIXTURES.md §1.1-1.2), vendored
+  private def fixture(name: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/$name").toURI).toString
+  private val exQ = fixture("test_query.txt")
+  private val exR = fixture("test_refs.txt")
   private val goldenRows = Seq(
     ("test", "test2"),
     ("a yellow banana from the store", "yellow banana"),
